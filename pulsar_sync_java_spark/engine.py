@@ -29,45 +29,55 @@ at-least-once replication (checkpoint commit), sampled mapping +
 floor/as-of cursor translation (replay-only error), create-once
 cursors.
 
-Scale notes: the catalog apply round-trips through the driver — the
-control plane is small by definition (the reference holds it in maps on
-a 10-thread JVM; `PulsarSync.java:44`) and parquet cannot be
-self-overwritten lazily.  The DATA plane never touches the driver: the
-replication stream and the mapping/cursor plans are pure
-DataFrame/Structured Streaming.
+Scale notes: the control plane is append-only — a tick appends exactly
+the rows it creates and never rewrites a row.  Each catalog level
+anti-joins src against the current dst and collects only its inserts
+(as Arrow), so only created rows reach the driver, which appends them
+as one parquet file written under a hidden name and renamed into place:
+a table never holds a partial file, and no Spark write job runs for a
+handful of rows.  (Cluster directories are therefore local or mounted
+paths, as the `os.path` handling throughout assumes.)  Catalogs stay
+unique by key because the anti-join keeps a created row from being
+appended again — the reference's create-then-tolerate-conflict
+(`PulsarTenantSyncManager.java:64-88`).  Subscriptions are versioned: a
+cursor advance appends a new row for its key, and the newest version
+(max `ts`, then `event_id`) wins.  A crash therefore leaves a prefix of
+a tick's appends, which the next tick completes.  Every cluster table
+is read with a declared schema (`streaming.replicate.CLUSTER_SCHEMAS`,
+`MESSAGE_SCHEMA`), so no read launches a schema-inference job and a
+missing or empty table reads as zero rows.  The DATA plane never
+touches the driver: the replication stream and the mapping/cursor plans
+are pure DataFrame/Structured Streaming.
 """
 
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+import uuid
+from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pulsar_sync_java_spark.plans.catalog_diff import (
-    NAMESPACE_KEY,
-    TENANT_KEY,
-    TOPIC_KEY,
-    diff_catalogs,
-)
+from pulsar_sync_java_spark.plans.catalog_diff import diff_catalogs
 from pulsar_sync_java_spark.plans.cursor_translate import (
+    latest_cursor,
     pending_creates,
     sparse_sample,
     translate,
 )
 from pulsar_sync_java_spark.sources.tables import ensure_session_confs
 from pulsar_sync_java_spark.streaming.replicate import (
+    CLUSTER_SCHEMAS,
+    MESSAGE_SCHEMA,
     read_message_stream,
     replicate,
 )
 
 CURSOR_KEY = ["topic", "partition", "cursor"]
-_CATALOGS: tuple[tuple[str, list[str]], ...] = (
-    ("tenants", TENANT_KEY),
-    ("namespaces", NAMESPACE_KEY),
-    ("topics", TOPIC_KEY),
-)
+_CATALOGS = ("tenants", "namespaces", "topics")
 
 
 @dataclass(frozen=True)
@@ -85,18 +95,9 @@ class SyncEngineConfig:
     # reference never moves a cursor again (SURVEY.md §2 fine print —
     # the R23 reset path is dead in practice).  With this flag,
     # `sync_cursors_once` also advances existing dst cursors forward
-    # (never backward) as the src cursor progresses.
+    # (never backward) as the src cursor progresses, appending each
+    # move as a new version of the cursor (the newest version wins).
     advance_cursors: bool = False
-    # Fail-fast ceiling for the driver write-back paths (catalog
-    # overwrite, subscriptions merge): these collect() because parquet
-    # cannot lazily self-overwrite, which is only sane while the
-    # control plane is small — the same assumption the reference bakes
-    # in by holding catalogs/cursors in JVM maps (PulsarSync.java:44).
-    # A population beyond this bound needs the partitioned-merge path
-    # (sinks.writers.write_partitioned + idempotent_append), not a
-    # bigger driver.
-    control_plane_max_rows: int = 1_000_000
-    extra: dict = field(default_factory=dict)
 
 
 class SyncEngine:
@@ -119,71 +120,57 @@ class SyncEngine:
         # idempotency signal)
         self.last_advanced = 0
 
-    # -- catalog plane ------------------------------------------------
+    # -- cluster tables -----------------------------------------------
+
+    def _read_path(self, path: str, schema: str) -> DataFrame:
+        """Read a cluster table with its declared schema; a missing
+        directory reads as zero rows, like an empty one."""
+        if not os.path.exists(path):
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(path)
 
     def _read(self, cluster: str, name: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(cluster, f"{name}.parquet"))
-
-    def _collect_control_plane(self, df: DataFrame, what: str) -> list:
-        """Bounded driver-side collect for the write-back paths.  The
-        limit(bound+1) means an over-bound table costs one extra row,
-        not an OOM, before the diagnosis."""
-        bound = self.config.control_plane_max_rows
-        rows = df.limit(bound + 1).collect()
-        if len(rows) > bound:
-            raise ValueError(
-                f"{what} exceeds control_plane_max_rows={bound}: the "
-                "driver write-back path assumes a control-plane-small "
-                "table (the reference holds catalogs/cursors in JVM "
-                "maps — PulsarSync.java:44). For populations beyond "
-                "this bound, switch to a partitioned merge "
-                "(sinks.writers.write_partitioned + idempotent_append) "
-                "or raise the bound explicitly in SyncEngineConfig."
-            )
-        return rows
-
-    def _overwrite_catalog(self, name: str, df: DataFrame) -> int:
-        """Write-back via the driver: a lazy parquet read cannot
-        overwrite its own path; catalogs are control-plane-small
-        (bounded by `control_plane_max_rows`, fail-fast).  Returns the
-        written row count (saves a re-read job)."""
-        rows = self._collect_control_plane(df, f"catalog {name!r}")
-        out = self.spark.createDataFrame(rows, df.schema)
-        out.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(self.dst, f"{name}.parquet")
+        return self._read_path(
+            os.path.join(cluster, f"{name}.parquet"), CLUSTER_SCHEMAS[name]
         )
-        return len(rows)
+
+    def _append(self, name: str, rows: pa.Table) -> int:
+        """Append already-collected rows to a dst table as one new
+        parquet file, writing nothing when there are none.  The file is
+        written under a hidden name, which readers skip, and renamed
+        into place, so a crash leaves either the whole file or none of
+        it.  Returns the number of rows appended."""
+        if rows.num_rows:
+            directory = os.path.join(self.dst, f"{name}.parquet")
+            os.makedirs(directory, exist_ok=True)
+            part = f"part-{uuid.uuid4().hex}.parquet"
+            tmp = os.path.join(directory, f".{part}.tmp")
+            pq.write_table(rows, tmp)
+            os.rename(tmp, os.path.join(directory, part))
+        return rows.num_rows
+
+    # -- catalog plane ------------------------------------------------
 
     def sync_catalog_once(self) -> dict[str, int]:
         """One control-plane tick (the reference's 3-min rescan body):
-        leveled anti-join diff, additive idempotent apply.  Returns the
-        number of creates per level — all zero on a converged pair, and
-        on every re-run after (idempotency)."""
+        per level, one anti-join of src against the current dst, whose
+        inserts are collected and appended.  Returns the number of
+        creates per level — all zero on a converged pair, and on every
+        re-run after (idempotency)."""
         enabled = {
             "tenants": self.config.auto_update_tenant,
             "namespaces": self.config.auto_update_namespace,
             "topics": self.config.auto_update_topic,
         }
         diff = diff_catalogs(
-            self._read(self.src, "tenants"),
-            self._read(self.src, "namespaces"),
-            self._read(self.src, "topics"),
-            self._read(self.dst, "tenants"),
-            self._read(self.dst, "namespaces"),
-            self._read(self.dst, "topics"),
+            *(self._read(c, name) for c in (self.src, self.dst) for name in _CATALOGS)
         )
-        created: dict[str, int] = {}
-        for name, key in _CATALOGS:
-            inserts = getattr(diff, name)
-            if not enabled[name]:
-                created[name] = 0
-                continue
-            dst_df = self._read(self.dst, name)
-            safe = inserts.join(dst_df.select(*key), on=key, how="left_anti")
-            merged = dst_df.unionByName(safe.select(*dst_df.columns))
-            n_before = dst_df.count()
-            created[name] = self._overwrite_catalog(name, merged) - n_before
-        return created
+        return {
+            name: self._append(name, getattr(diff, name).toArrow())
+            if enabled[name]
+            else 0
+            for name in _CATALOGS
+        }
 
     # -- data plane ---------------------------------------------------
 
@@ -207,7 +194,7 @@ class SyncEngine:
         """R17: the sampled MessageId mapping, from the REPLICATED
         messages (a mapping entry must point at a position that exists
         on dst).  One sample per (topic, partition) per interval."""
-        msgs = self.spark.read.parquet(os.path.join(self.dst, "messages"))
+        msgs = self._read_path(os.path.join(self.dst, "messages"), MESSAGE_SCHEMA)
         return sparse_sample(
             msgs.select(
                 "topic",
@@ -221,6 +208,18 @@ class SyncEngine:
 
     # -- cursor plane -------------------------------------------------
 
+    def _translated(self) -> DataFrame:
+        """Src cursors floor-translated through the sampled mapping.  A
+        cursor with no floor sample at-or-before it yet is left out this
+        tick (the reference's findMessageId miss; replication will
+        sample more of the mapping and a later tick resolves it)."""
+        return translate(
+            self._read(self.src, "subscriptions"),
+            self.build_mapping(),
+            key_cols=["topic", "partition"],
+            carry_cols=["cursor"],
+        ).filter(F.col("translated_id").isNotNull())
+
     def sync_cursors_once(self) -> int:
         """One `syncCursor` tick (R19-R23): src subscription snapshot ->
         as-of floor translation against the sampled mapping ->
@@ -229,31 +228,15 @@ class SyncEngine:
         existing cursors (`advance_cursors=True`) runs in the same tick
         but is reported separately by `run_once` so the idempotency
         signal stays unambiguous."""
-        src_subs = self._read(self.src, "subscriptions")
-        mapping = self.build_mapping()
-        translated = translate(
-            src_subs.select("topic", "partition", "cursor", "ts", "event_id"),
-            mapping,
-            key_cols=["topic", "partition"],
-            carry_cols=["cursor"],
-        )
-        # no floor sample at-or-before the cursor yet -> skip this tick
-        # (the reference's findMessageId miss; replication will sample
-        # more of the mapping and a later tick resolves it)
-        translated = translated.filter(F.col("translated_id").isNotNull())
-        dst_path = os.path.join(self.dst, "subscriptions.parquet")
-        dst_subs = self.spark.read.parquet(dst_path)
-        creates = pending_creates(translated, dst_subs, key_cols=CURSOR_KEY)
-        out = creates.select(
-            "topic",
-            "partition",
-            "cursor",
+        translated = self._translated()
+        creates = pending_creates(
+            translated, self._read(self.dst, "subscriptions"), key_cols=CURSOR_KEY
+        ).select(
+            *CURSOR_KEY,
             F.col("translated_ts").alias("ts"),
             F.col("translated_id").alias("event_id"),
         )
-        n = out.count()
-        if n:
-            out.write.mode("append").parquet(dst_path)
+        n = self._append("subscriptions", creates.toArrow())
         self.last_advanced = (
             self.advance_cursors_once(translated)
             if self.config.advance_cursors
@@ -270,26 +253,19 @@ class SyncEngine:
         moves FORWARD to the newest translated floor position when the
         src cursor has progressed.
 
-        Monotone by construction (`translated_ts > dst.ts` guard): a
-        src cursor that moved backward, or a mapping floor behind the
-        already-created position, never regresses dst — the
-        replay-only safety property is preserved in both directions.
-        Control-plane-small write-back, same as the catalog applies.
+        Monotone by construction (`translated_ts > dst.ts` guard against
+        the newest dst version of each cursor): a src cursor that moved
+        backward, or a mapping floor behind the already-created
+        position, never regresses dst — the replay-only safety property
+        is preserved in both directions.  Each move is appended as a new
+        version of its cursor; returns the number of cursors moved.
         """
         if translated is None:
-            src_subs = self._read(self.src, "subscriptions")
-            mapping = self.build_mapping()
-            translated = translate(
-                src_subs.select("topic", "partition", "cursor", "ts", "event_id"),
-                mapping,
-                key_cols=["topic", "partition"],
-                carry_cols=["cursor"],
-            ).filter(F.col("translated_id").isNotNull())
-        dst_path = os.path.join(self.dst, "subscriptions.parquet")
-        dst_subs = self.spark.read.parquet(dst_path)
+            translated = self._translated()
+        current = latest_cursor(self._read(self.dst, "subscriptions"), CURSOR_KEY)
         moved = (
             translated.alias("t")
-            .join(dst_subs.alias("d"), on=CURSOR_KEY, how="inner")
+            .join(current.alias("d"), on=CURSOR_KEY, how="inner")
             .filter(F.col("t.translated_ts") > F.col("d.ts"))
             .select(
                 *CURSOR_KEY,
@@ -297,14 +273,7 @@ class SyncEngine:
                 F.col("t.translated_id").alias("event_id"),
             )
         )
-        n = moved.count()
-        if n:
-            kept = dst_subs.join(moved.select(*CURSOR_KEY), CURSOR_KEY, "left_anti")
-            merged = kept.unionByName(moved.select(*dst_subs.columns))
-            rows = self._collect_control_plane(merged, "subscriptions merge")
-            out = self.spark.createDataFrame(rows, merged.schema)
-            out.coalesce(1).write.mode("overwrite").parquet(dst_path)
-        return n
+        return self._append("subscriptions", moved.toArrow())
 
     # -- orchestration --------------------------------------------------
 

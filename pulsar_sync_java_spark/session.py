@@ -14,6 +14,42 @@ import os
 from pyspark.sql import SparkSession
 
 
+# Share of the machine's memory given to the driver heap; the rest is
+# left to the JVM's off-heap memory, the Python workers and the test or
+# benchmark process itself.
+DRIVER_MEMORY_FRACTION = 0.4
+
+
+def default_driver_memory(
+    meminfo: str = "/proc/meminfo",
+    cgroup_max: str = "/sys/fs/cgroup/memory.max",
+) -> str:
+    """The driver heap when SPARK_GRAFT_DRIVER_MEM is unset:
+    DRIVER_MEMORY_FRACTION of the smaller of physical memory (MemTotal)
+    and the cgroup v2 memory limit, as a Spark size in MiB.  Either file
+    may be missing, and a cgroup limit of "max" means none; with neither
+    readable the default is 4g."""
+    limits = []
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    limits.append(int(line.split()[1]) * 1024)  # kB
+                    break
+    except OSError:
+        pass
+    try:
+        with open(cgroup_max) as f:
+            value = f.read().strip()
+        if value != "max":
+            limits.append(int(value))
+    except (OSError, ValueError):
+        pass
+    if not limits:
+        return "4g"
+    return f"{int(min(limits) * DRIVER_MEMORY_FRACTION) >> 20}m"
+
+
 def get_spark(
     app_name: str = "pulsar-sync-spark",
     shuffle_partitions: int | None = None,
@@ -45,7 +81,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # events.parquet carries TIMESTAMP(NANOS); Spark has no ns

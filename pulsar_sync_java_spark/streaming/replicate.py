@@ -43,6 +43,22 @@ MESSAGE_SCHEMA = (
     "publish_time timestamp, properties map<string,string>"
 )
 
+# The control-plane tables of a cluster directory (engine.py), keyed by
+# table name.  Reading with a declared schema skips Spark's
+# schema-inference job and lets an empty table directory read as zero
+# rows instead of raising UNABLE_TO_INFER_SCHEMA.
+CLUSTER_SCHEMAS = {
+    "tenants": "tenant string",
+    "namespaces": "tenant string, namespace string, policies string",
+    "topics": (
+        "tenant string, namespace string, topic string, partitions int, "
+        "properties map<string,string>"
+    ),
+    "subscriptions": (
+        "topic string, partition int, cursor string, ts timestamp, event_id long"
+    ),
+}
+
 
 def message_projection(df: DataFrame) -> DataFrame:
     """R15: the per-message copy (`PulsarPartitionSyncWorker.java:220-231`)

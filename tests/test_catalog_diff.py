@@ -13,9 +13,9 @@ from pulsar_sync_java_spark.plans.catalog_diff import (
     NAMESPACE_KEY,
     TENANT_KEY,
     TOPIC_KEY,
-    apply_diff,
     diff_catalogs,
     expand_partitions,
+    missing,
     non_partitioned,
 )
 
@@ -95,25 +95,24 @@ def test_partition_name_filter(spark):
     assert kept == ["plain"]
 
 
-def test_apply_is_idempotent_and_additive(spark, catalogs):
-    """Conflict-tolerance analogue: applying the same diff twice is a
-    no-op; entities present only on dst are never removed."""
+def test_missing_is_empty_once_inserts_are_appended(spark, catalogs):
+    """Conflict-tolerance analogue: once a level's inserts are appended
+    to dst, the same anti-join finds nothing left to create; entities
+    present only on dst are never removed."""
     src_tenants, src_ns, src_topics, dst_tenants, dst_ns, dst_topics = catalogs
     dst_extra = dst_tenants.union(spark.createDataFrame([("dst-only",)], ["tenant"]))
-    d = diff_catalogs(src_tenants, src_ns, src_topics, dst_extra, dst_ns, dst_topics)
-
-    once = apply_diff(dst_extra, d.tenants, TENANT_KEY)
-    twice = apply_diff(once, d.tenants, TENANT_KEY)
-    names_once = sorted(r.tenant for r in once.collect())
-    names_twice = sorted(r.tenant for r in twice.collect())
-    assert names_once == names_twice == ["acme", "dst-only", "public", "test-tenant"]
-
-    ns_once = apply_diff(dst_ns, d.namespaces, NAMESPACE_KEY)
-    ns_twice = apply_diff(ns_once, d.namespaces, NAMESPACE_KEY)
-    assert ns_once.count() == ns_twice.count() == 3
-
-    t_once = apply_diff(dst_topics, d.topics.select(*dst_topics.columns), TOPIC_KEY)
-    assert apply_diff(t_once, d.topics.select(*dst_topics.columns), TOPIC_KEY).count() == t_once.count() == 3
+    for src, dst, key, want in (
+        (src_tenants, dst_extra, TENANT_KEY, 4),
+        (src_ns, dst_ns, NAMESPACE_KEY, 3),
+        (src_topics, dst_topics, TOPIC_KEY, 3),
+    ):
+        once = dst.unionByName(missing(src, dst, key))
+        assert once.count() == want
+        assert missing(src, once, key).count() == 0
+    tenants = dst_extra.unionByName(missing(src_tenants, dst_extra, TENANT_KEY))
+    assert sorted(r.tenant for r in tenants.collect()) == [
+        "acme", "dst-only", "public", "test-tenant"
+    ]
 
 
 def test_policies_payload_rides_along(spark, catalogs):

@@ -7,11 +7,17 @@ place of dual embedded brokers + Awaitility.
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from pulsar_sync_java_spark.engine import SyncEngine, SyncEngineConfig
+from pulsar_sync_java_spark.plans.catalog_diff import (
+    NAMESPACE_KEY,
+    TENANT_KEY,
+    TOPIC_KEY,
+)
 from tests.test_streaming import build_messages
 
 
@@ -36,6 +42,17 @@ def _write_catalog(spark, cluster: str, tenants, namespaces, topics, subs):
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(cluster, "subscriptions.parquet")
     )
+
+
+def _newest_cursors(spark, cluster: str) -> dict:
+    """(topic, partition, cursor) -> ts of each cursor's newest version
+    (max ts, then event_id): subscriptions are versioned, newest wins."""
+    newest: dict = {}
+    path = os.path.join(cluster, "subscriptions.parquet")
+    for r in spark.read.parquet(path).collect():
+        k = (r.topic, r.partition, r.cursor)
+        newest[k] = max(newest.get(k, (r.ts, r.event_id)), (r.ts, r.event_id))
+    return {k: ts for k, (ts, _) in newest.items()}
 
 
 @pytest.fixture(scope="module")
@@ -200,23 +217,6 @@ def test_deleted_dst_subscription_recreated_at_translated_position(
     assert engine.sync_cursors_once() == 0
 
 
-def test_control_plane_write_back_is_bounded(spark, clusters):
-    """The driver write-back paths fail fast past control_plane_max_rows
-    with a pointer at the partitioned-merge alternative, instead of
-    collecting an unbounded table onto the driver."""
-    src, dst = clusters
-    engine = SyncEngine(
-        spark, src, dst, SyncEngineConfig(control_plane_max_rows=2)
-    )
-    with pytest.raises(ValueError, match="control_plane_max_rows"):
-        engine.sync_catalog_once()
-    # the bound names the escape hatch, not just the failure
-    try:
-        engine.sync_catalog_once()
-    except ValueError as e:
-        assert "write_partitioned" in str(e)
-
-
 @pytest.mark.slow
 def test_cursor_advancement_opt_in(spark, clusters):
     """Opt-in improvement over the reference's frozen cursors: when new
@@ -264,14 +264,14 @@ def test_cursor_advancement_opt_in(spark, clusters):
         moved, "topic string, partition int, cursor string, ts timestamp, event_id long"
     ).coalesce(1).write.mode("overwrite").parquet(sub_path)
 
-    before = {
-        (r.topic, r.partition, r.cursor): r.ts
-        for r in spark.read.parquet(os.path.join(dst, "subscriptions.parquet")).collect()
-    }
+    dst_subs = os.path.join(dst, "subscriptions.parquet")
+    before_rows = spark.read.parquet(dst_subs).count()
+    before = _newest_cursors(spark, dst)
     n = engine.advance_cursors_once()
-    after_rows = spark.read.parquet(os.path.join(dst, "subscriptions.parquet")).collect()
-    after = {(r.topic, r.partition, r.cursor): r.ts for r in after_rows}
+    after = _newest_cursors(spark, dst)
     assert n > 0
+    # each move is appended as a new version; older versions stay
+    assert spark.read.parquet(dst_subs).count() == before_rows + n
     assert set(after) == set(before)  # advancement never creates/drops
     src_ts = {(t, p, c): ts for (t, p, c, ts, _) in moved}
     moved_forward = 0
@@ -441,3 +441,164 @@ def test_cli_main_ticks_and_converges(spark, tmp_path, capsys):
     # second tick: converged — every apply count zero
     assert t1["tick"] == 1
     assert all(v == 0 for k, v in t1.items() if k != "tick"), t1
+
+
+_CATALOG_KEYS = {
+    "tenants": TENANT_KEY,
+    "namespaces": NAMESPACE_KEY,
+    "topics": TOPIC_KEY,
+}
+
+
+def _catalog_keys(spark, cluster: str, name: str) -> list[tuple]:
+    path = os.path.join(cluster, f"{name}.parquet")
+    keys = spark.read.parquet(path).select(*_CATALOG_KEYS[name])
+    return [tuple(r) for r in keys.collect()]
+
+
+def _assert_catalogs_converged(spark, engine) -> None:
+    """dst ⊇ src with no duplicate key at any level, and the tick after
+    creates nothing."""
+    for name in _CATALOG_KEYS:
+        dst_keys = _catalog_keys(spark, engine.dst, name)
+        assert len(dst_keys) == len(set(dst_keys)), name
+        assert set(_catalog_keys(spark, engine.src, name)) <= set(dst_keys), name
+    assert engine.sync_catalog_once() == {"tenants": 0, "namespaces": 0, "topics": 0}
+
+
+@pytest.mark.slow
+def test_bare_dst_converges_like_schema_only_dst(spark, clusters, tmp_path):
+    """A dst directory with no tables at all reads as empty: one pass
+    converges it to the same state as a dst seeded with schema-only
+    tables, and the pass after creates nothing."""
+    src, _ = clusters
+    seeded, bare = str(tmp_path / "seeded"), str(tmp_path / "bare")
+    _write_catalog(spark, seeded, [], [], [], [])
+    os.makedirs(os.path.join(seeded, "messages"))
+    os.makedirs(bare)
+
+    def state(dst: str) -> dict:
+        out = {
+            name: sorted(_catalog_keys(spark, dst, name)) for name in _CATALOG_KEYS
+        }
+        out["messages"] = spark.read.parquet(os.path.join(dst, "messages")).count()
+        out["subscriptions"] = sorted(
+            tuple(r) for r in spark.read.parquet(
+                os.path.join(dst, "subscriptions.parquet")
+            ).collect()
+        )
+        return out
+
+    created = {d: SyncEngine(spark, src, d).run_once() for d in (seeded, bare)}
+    assert created[bare] == created[seeded]
+    assert created[bare]["cursors"] > 0
+    assert state(bare) == state(seeded)
+    again = SyncEngine(spark, src, bare).run_once()
+    assert again == {"tenants": 0, "namespaces": 0, "topics": 0, "cursors": 0}
+
+
+def test_catalog_tick_appends_only_created_rows(spark, clusters, tmp_path):
+    """Append-only: a tick leaves every existing catalog file as it
+    was and adds one file per level holding exactly the created rows;
+    a converged tick writes nothing."""
+    src, _ = clusters
+    dst = str(tmp_path / "dst")
+    engine = SyncEngine(spark, src, dst)
+    engine.sync_catalog_once()
+
+    def files() -> dict[str, float]:
+        return {
+            os.path.join(base, f): os.path.getmtime(os.path.join(base, f))
+            for name in _CATALOG_KEYS
+            for base, _, fs in os.walk(os.path.join(dst, f"{name}.parquet"))
+            for f in fs
+        }
+
+    before = files()
+    assert engine.sync_catalog_once() == {"tenants": 0, "namespaces": 0, "topics": 0}
+    assert files() == before
+
+    more = str(tmp_path / "src-more")
+    shutil.copytree(src, more, ignore=shutil.ignore_patterns("messages"))
+    spark.createDataFrame([("later-tenant",)], "tenant string").write.mode(
+        "append"
+    ).parquet(os.path.join(more, "tenants.parquet"))
+    assert SyncEngine(spark, more, dst).sync_catalog_once()["tenants"] == 1
+    after = files()
+    assert {k: after[k] for k in before} == before
+    (added,) = set(after) - set(before)
+    assert [r.tenant for r in spark.read.parquet(added).collect()] == ["later-tenant"]
+
+
+def test_restart_after_crash_between_catalog_levels(
+    spark, clusters, tmp_path, monkeypatch
+):
+    """A tick killed after appending tenants but before namespaces and
+    topics: the next tick completes the other levels."""
+    src, _ = clusters
+    dst = str(tmp_path / "dst")
+    crashing = SyncEngine(spark, src, dst)
+    append = crashing._append
+
+    def append_tenants_then_crash(name, rows):
+        if name != "tenants":
+            raise RuntimeError("killed")
+        return append(name, rows)
+
+    monkeypatch.setattr(crashing, "_append", append_tenants_then_crash)
+    with pytest.raises(RuntimeError, match="killed"):
+        crashing.sync_catalog_once()
+    assert _catalog_keys(spark, dst, "tenants")
+    assert not os.path.exists(os.path.join(dst, "topics.parquet"))
+
+    engine = SyncEngine(spark, src, dst)
+    created = engine.sync_catalog_once()
+    assert created["tenants"] == 0 and created["topics"] > 0
+    _assert_catalogs_converged(spark, engine)
+
+
+def test_restart_ignores_uncommitted_catalog_writes(spark, clusters, tmp_path):
+    """Writes that never committed stay invisible: a Spark job's
+    `_temporary/` attempt and task output, and a half-written hidden
+    file of an interrupted append.  The next tick creates every row
+    they held, once."""
+    src, _ = clusters
+    dst = str(tmp_path / "dst")
+    topics = os.path.join(dst, "topics.parquet")
+    staged = str(tmp_path / "staged")
+    src_topics = spark.read.parquet(os.path.join(src, "topics.parquet"))
+    src_topics.coalesce(1).write.parquet(staged)
+    (part,) = [f for f in os.listdir(staged) if f.endswith(".parquet")]
+    for attempt in (
+        "_temporary/0/_temporary/attempt_202610180000_0001_m_000000_0",
+        "_temporary/0/task_202610180000_0001_m_000000",
+    ):
+        os.makedirs(os.path.join(topics, attempt))
+        shutil.copy(os.path.join(staged, part), os.path.join(topics, attempt, part))
+    with open(os.path.join(staged, part), "rb") as f:
+        half = f.read()[:100]
+    with open(os.path.join(topics, ".part-interrupted.parquet.tmp"), "wb") as f:
+        f.write(half)
+
+    engine = SyncEngine(spark, src, dst)
+    created = engine.sync_catalog_once()
+    assert created["topics"] == src_topics.count()
+    _assert_catalogs_converged(spark, engine)
+
+
+def test_restart_after_catalog_directory_deleted(spark, clusters, tmp_path):
+    """A catalog directory that vanished (the window in which an
+    overwrite has deleted the old files and not yet written the new
+    ones) reads as empty, and the next tick re-creates it."""
+    src, _ = clusters
+    dst = str(tmp_path / "dst")
+    engine = SyncEngine(spark, src, dst)
+    first = engine.sync_catalog_once()
+    shutil.rmtree(os.path.join(dst, "namespaces.parquet"))
+    shutil.rmtree(os.path.join(dst, "topics.parquet"))
+
+    created = engine.sync_catalog_once()
+    assert created == {
+        "tenants": 0, "namespaces": first["namespaces"], "topics": first["topics"]
+    }
+    _assert_catalogs_converged(spark, engine)

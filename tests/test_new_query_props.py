@@ -860,6 +860,33 @@ def test_mad_outliers_matches_numpy(spark):
         ), etype
 
 
+def test_mad_outliers_skips_null_event_type(spark, tmp_path):
+    """A NULL event_type is left out, as the oracle's equi-joins leave
+    it out, instead of breaking the per-type literal lookup."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = 5
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(n), pa.int64()),
+            "ts": pa.array([datetime.datetime(2024, 1, 1)] * n, pa.timestamp("us")),
+            "user_id": pa.array([1] * n, pa.int64()),
+            "event_type": ["a", "a", "b", None, None],
+            "value": [1.0, 3.0, 2.0, 7.0, 9.0],
+            "props": ["{}"] * n,
+        }),
+        str(tmp_path / "events.parquet"),
+    )
+    got = sorted(
+        (r["event_type"], r["n"], r["median"], r["mad"], r["n_outliers"])
+        for r in _QUERIES["q_mad_outliers"](spark, str(tmp_path)).collect()
+    )
+    assert got == [("a", 2, 2.0, 1.0, 0), ("b", 1, 2.0, 0.0, 0)]
+
+
 def test_char_diversity_matches_python_counter(spark, docs_pdf):
     """Collision probability / Simpson index vs collections.Counter."""
     import re as _re
